@@ -41,7 +41,6 @@ from inception_spark.operators.chunking import chunk_documents
 from inception_spark.operators.encoding import (
     Encoder,
     HashingStubEncoder,
-    default_encoder,
     make_embed_udf,
 )
 
@@ -231,21 +230,27 @@ class EmbeddingEngine:
         (routes/embedding.py:103-110) — in quarantine mode the cap is
         advisory, because bounded request batches are an HTTP concern
         Spark scales past."""
+        err = self._validation_error(F.col("text"))
+        tagged = df.withColumn("_error", err)
         if mode == "strict":
-            n = df.limit(self.config.max_batch_size + 1).count()
+            # one aggregate over the tagged frame: the batch size and the
+            # lowest-id invalid document (struct order compares id first)
+            n, first = tagged.agg(
+                F.count(F.lit(1)),
+                F.min(
+                    F.when(
+                        F.col("_error").isNotNull(), F.struct("id", "_error")
+                    )
+                ),
+            ).first()
             if n > self.config.max_batch_size:
                 raise ValueError(
                     f"Batch size exceeds maximum of "
                     f"{self.config.max_batch_size} documents"
                 )
-        err = self._validation_error(F.col("text"))
-        tagged = df.withColumn("_error", err)
+            if first is not None:
+                raise ValueError(f"Document {first['id']}: {first['_error']}")
         bad = tagged.filter(F.col("_error").isNotNull())
-        if mode == "strict":
-            first = bad.select("id", "_error").orderBy("id").limit(1).collect()
-            if first:
-                r = first[0]
-                raise ValueError(f"Document {r['id']}: {r['_error']}")
         good = tagged.filter(F.col("_error").isNull()).drop("_error")
         return good, bad.withColumnRenamed("_error", "error")
 
@@ -261,9 +266,11 @@ class EmbeddingEngine:
         chunk, n_tokens, embedding) — the /embed/batch pipeline."""
         self.metrics.record_request("batch")
         good, _bad = self.validate_documents(df, mode=validate)
-        chunks = self.chunk(good)
+        return self._chunk_and_embed(good)
+
+    def _chunk_and_embed(self, docs: DataFrame) -> DataFrame:
         embed = self._embed_udf(self.config.lead_document)
-        return chunks.withColumn("embedding", embed(F.col("chunk")))
+        return self.chunk(docs).withColumn("embedding", embed(F.col("chunk")))
 
     def embed_documents_delta(
         self,
@@ -332,14 +339,18 @@ class EmbeddingEngine:
         return carried.unionByName(fresh)
 
     def embed_text(self, text: str) -> DataFrame:
-        """Single raw-text document (id=0, reference routes/embedding.py:78)."""
+        """Single raw-text document (id=0, reference routes/embedding.py:78).
+        Validated once, on the driver, as the reference does
+        (routes/embedding.py:68-92); the one-row frame then goes straight
+        to the chunk → embed step."""
         validate_text_length_py(
             text,
             min_len=self.config.min_text_length,
             max_len=self.config.max_text_length,
         )
+        self.metrics.record_request("batch")
         df = self.spark.createDataFrame([(0, text)], "id long, text string")
-        return self.embed_documents(df, validate="strict")
+        return self._chunk_and_embed(df)
 
     def embed_query(self, text: str) -> list[float]:
         """Low-latency single-query path — driver-local, no Spark job

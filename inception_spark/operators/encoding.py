@@ -15,8 +15,9 @@ Two encoder implementations behind one interface (SURVEY.md §7.1):
   machines, so pipeline tests can assert values, not just shapes.
 * :class:`SentenceTransformerEncoder` — the real model
   (``freelawproject/modernbert-embed-base_finetune_512``, reference
-  config.py:6-9), import-gated: used automatically when
-  ``sentence_transformers`` + torch are installed.
+  config.py:6-9), import-gated on ``sentence_transformers`` + torch.
+  Opt-in: :class:`~inception_spark.engine.EmbeddingEngine` defaults to
+  the stub; pass ``encoder=SentenceTransformerEncoder()`` to use the model.
 
 The retrieval prefixes are applied *inside* the encoder
 (``search_document: `` / ``search_query: ``, reference
@@ -105,15 +106,6 @@ class SentenceTransformerEncoder:
                 self._torch.cuda.empty_cache()
 
 
-def default_encoder(config: EngineConfig = DEFAULT_CONFIG) -> Encoder:
-    try:
-        return SentenceTransformerEncoder(
-            dim=config.embedding_dim, force_cpu=config.force_cpu
-        )
-    except ImportError:
-        return HashingStubEncoder(dim=config.embedding_dim)
-
-
 # ---------------------------------------------------------------------------
 # the distributed encode operator
 # ---------------------------------------------------------------------------
@@ -190,43 +182,3 @@ def make_embed_udf(
 
     return embed_udf
 
-
-def make_embed_udf_ml(
-    config: EngineConfig = DEFAULT_CONFIG,
-    *,
-    encoder_kind: str = "stub",
-    prefix: str | None = None,
-):
-    """Alternative encode operator via ``pyspark.ml.functions
-    .predict_batch_udf`` (SURVEY.md §2.3 C5's suggested mapping).
-
-    predict_batch_udf handles Arrow batching + model caching itself
-    (make_predict_fn runs once per worker), and its ``batch_size``
-    mirrors the reference's processing micro-batch (O2).  Functionally
-    identical to :func:`make_embed_udf`; kept as the MLlib-idiomatic
-    integration point for `spark.ml` pipelines."""
-    import numpy as np
-    from pyspark.ml.functions import predict_batch_udf
-    from pyspark.sql import types as T
-
-    dim, fcpu, bsz = (
-        config.embedding_dim,
-        config.force_cpu,
-        config.processing_batch_size,
-    )
-    lead = config.lead_document if prefix is None else prefix
-
-    def make_predict_fn():
-        enc = _worker_encoder(encoder_kind, dim, fcpu)
-
-        def predict(texts: np.ndarray) -> np.ndarray:
-            batch = [lead + (t if isinstance(t, str) else "") for t in texts]
-            return enc.encode(batch, batch_size=bsz)
-
-        return predict
-
-    return predict_batch_udf(
-        make_predict_fn,
-        return_type=T.ArrayType(T.FloatType()),
-        batch_size=bsz,
-    )

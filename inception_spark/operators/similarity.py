@@ -46,22 +46,16 @@ def cosine_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Exact top-k by cosine: (vec_id, score), deterministic tie-break on
-    id.  Score rounded to 6 decimals BEFORE ranking so the ordering (and
-    therefore the selected set) is reproducible across engines."""
-    q = _query_vec_col(query_vec)
-    scored = df.select(
-        F.col(id_col).alias("vec_id"),
-        F.round(cosine(F.col(vec_col), q), 6).alias("score"),
-    )
-    # orderBy+limit compiles to TakeOrderedAndProject (distributed
-    # per-partition top-k + k-row merge); a global row_number window would
-    # shuffle EVERY scored row into one task.  The rank window then runs
-    # on only k rows.
-    top = scored.orderBy(F.desc("score"), F.asc("vec_id")).limit(k)
-    w = Window.orderBy(F.desc("score"), F.asc("vec_id"))
-    return top.withColumn("rank", F.row_number().over(w)).select(
-        "vec_id", "score", "rank"
+    """Exact top-k by cosine: (vec_id, score, rank), deterministic
+    tie-break on id.  Score rounded to 6 decimals BEFORE ranking so the
+    ordering (and therefore the selected set) is reproducible across
+    engines.  :func:`semantic_search` over a single ``vec_id`` key."""
+    return semantic_search(
+        df.select(F.col(id_col).alias("vec_id"), vec_col),
+        query_vec,
+        k=k,
+        id_cols=("vec_id",),
+        vec_col=vec_col,
     )
 
 

@@ -3,7 +3,6 @@ Arrow on/off, shuffle-partition counts — the properties the oracle hash
 gate depends on."""
 
 import pytest
-from pyspark.sql import functions as F
 
 import __spark_entry__ as entry_mod
 
@@ -35,16 +34,3 @@ def test_results_invariant_to_exec_config(spark, name):
         for k, v in saved.items():
             spark.conf.set(k, v)
 
-
-def test_ml_embed_udf_matches_pandas_udf(spark):
-    from inception_spark.operators.encoding import (
-        make_embed_udf,
-        make_embed_udf_ml,
-    )
-
-    df = spark.createDataFrame(
-        [(1, "alpha beta gamma"), (2, "delta epsilon")], "id long, chunk string"
-    )
-    a = df.withColumn("e", make_embed_udf()(F.col("chunk"))).collect()
-    b = df.withColumn("e", make_embed_udf_ml()(F.col("chunk"))).collect()
-    assert {r["id"]: r["e"] for r in a} == {r["id"]: r["e"] for r in b}

@@ -250,6 +250,110 @@ def test_strict_mode_enforces_batch_size_cap(spark):
     assert good.count() == 5 and bad.count() == 0
 
 
+
+def _spark_jobs(spark, action) -> int:
+    """Number of Spark jobs ``action()`` starts, counted by job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"job-count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job-start events posted
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_embed_text_runs_one_spark_job(spark, engine, sample_opinion):
+    """/embed/text is validated once, on the driver; the request itself
+    is the single chunk → embed job."""
+    n = _spark_jobs(spark, lambda: engine.embed_text(sample_opinion).collect())
+    assert n == 1
+
+
+@pytest.mark.parametrize(
+    "text, message",
+    [
+        ("", "Text length (0) below minimum (1)"),
+        ("   ", "Text length (0) below minimum (1)"),
+        (" \n ", "Text length (0) below minimum (1)"),
+        (" " + "x" * 21 + "\n", "Text length (21) exceeds maximum (20)"),
+    ],
+)
+def test_embed_text_rejection_messages(spark, text, message):
+    eng = EmbeddingEngine(spark, EngineConfig(max_text_length=20))
+    with pytest.raises(ValueError) as e:
+        eng.embed_text(text)
+    assert str(e.value) == message
+    assert eng.metrics.request_count == {}  # rejected before it is counted
+
+
+def test_strict_reports_lowest_invalid_id(spark):
+    """Ids 9 and 4 are both invalid, with different errors: strict mode
+    names document 4 and its own error."""
+    eng = EmbeddingEngine(spark, EngineConfig(max_text_length=20))
+    df = docs_df(spark, [(9, ""), (1, "A valid opinion."), (4, "x" * 30)])
+    with pytest.raises(ValueError) as e:
+        eng.embed_documents(df, validate="strict")
+    assert str(e.value) == "Document 4: Text length (30) exceeds maximum (20)"
+
+
+def test_strict_batch_cap_message_wins(spark):
+    eng = EmbeddingEngine(spark, EngineConfig(max_batch_size=3))
+    df = docs_df(
+        spark, [(i, "" if i == 2 else f"document number {i}") for i in range(5)]
+    )
+    with pytest.raises(ValueError) as e:
+        eng.embed_documents(df, validate="strict")
+    assert str(e.value) == "Batch size exceeds maximum of 3 documents"
+
+
+def test_strict_validation_job_count(spark, engine):
+    """Strict validation reads its input in one aggregate (≤ 2 jobs with
+    the aggregate's shuffle); the request then adds one collect job."""
+    df = docs_df(spark, [(i, f"Document number {i}.") for i in range(5)])
+    n = _spark_jobs(spark, lambda: engine.validate_documents(df, mode="strict"))
+    assert n <= 2
+    n = _spark_jobs(
+        spark, lambda: engine.embed_documents(df, validate="strict").collect()
+    )
+    assert n <= 3
+
+
+def test_every_engine_config_field_is_read():
+    """No inert knobs: every EngineConfig field is read as ``.name`` in
+    the package outside config.py, directly or through a derived
+    property (e.g. ``num_overlap_sentences``) that is."""
+    import dataclasses
+    import inspect
+    import pathlib
+    import re
+
+    import inception_spark
+
+    root = pathlib.Path(inception_spark.__file__).parent
+    src = "\n".join(
+        p.read_text() for p in root.rglob("*.py") if p != root / "config.py"
+    )
+
+    def read(name: str) -> bool:
+        return re.search(rf"\.{name}\b", src) is not None
+
+    derived = "\n".join(
+        inspect.getsource(attr.fget)
+        for name, attr in vars(EngineConfig).items()
+        if isinstance(attr, property) and read(name)
+    )
+    inert = [
+        f.name
+        for f in dataclasses.fields(EngineConfig)
+        if not (read(f.name) or f"self.{f.name}" in derived)
+    ]
+    assert inert == []
+
 def test_hybrid_search_fuses_lexical_and_vector(spark):
     from inception_spark.engine import EmbeddingEngine
 

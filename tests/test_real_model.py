@@ -1,5 +1,4 @@
-"""Real-model path tier (C8/C9/M6) + stub equivalence of the two encode
-operators.
+"""Real-model path tier (C8/C9/M6).
 
 The torch/sentence_transformers tests SKIP in this environment (no ML
 libs installable — PARITY.md); they exist so the parity claims become
@@ -7,35 +6,13 @@ executable the moment the real stack is present.  Everything else runs.
 """
 
 import pytest
-from pyspark.sql import functions as F
 
-from inception_spark.config import DEFAULT_CONFIG
 from inception_spark.operators import encoding as E
 
 
 # ---------------------------------------------------------------------------
 # runnable everywhere
 # ---------------------------------------------------------------------------
-
-
-def test_embed_udf_equals_predict_batch_udf(spark):
-    """make_embed_udf ≡ make_embed_udf_ml on the stub encoder: same
-    prefix handling, same vectors, element for element."""
-    docs = (
-        spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        .limit(50)
-        .select("doc_id", F.col("text").alias("chunk"))
-    )
-    a_udf = E.make_embed_udf(DEFAULT_CONFIG, encoder_kind="stub")
-    b_udf = E.make_embed_udf_ml(DEFAULT_CONFIG, encoder_kind="stub")
-    out = docs.select(
-        "doc_id",
-        a_udf(F.col("chunk")).alias("a"),
-        b_udf(F.col("chunk")).alias("b"),
-    ).collect()
-    assert len(out) == 50
-    for r in out:
-        assert r["a"] == r["b"], f"doc {r['doc_id']} vectors differ"
 
 
 def test_load_with_retry_recovers_and_gives_up(monkeypatch):
@@ -61,18 +38,6 @@ def test_load_with_retry_recovers_and_gives_up(monkeypatch):
 
     with pytest.raises(RuntimeError, match="after 3 attempts"):
         E._load_with_retry(always_fails)
-
-
-def test_default_encoder_falls_back_to_stub():
-    enc = E.default_encoder()
-    # in this env there is no sentence_transformers → stub; with the real
-    # stack installed this becomes the SentenceTransformerEncoder branch
-    try:
-        import sentence_transformers  # noqa: F401
-
-        assert isinstance(enc, E.SentenceTransformerEncoder)
-    except ImportError:
-        assert isinstance(enc, E.HashingStubEncoder)
 
 
 def test_health_reports_gpu_absent_without_torch(spark):
